@@ -1,0 +1,1 @@
+"""Benchmark of the engine; entry point: perfbench/run.py."""
